@@ -32,4 +32,31 @@ object BinPack {
   /** Pack items carrying payloads; returns (payload, binId) preserving order. */
   def pack[T](items: Seq[T], weight: T => Long, budget: Long): Seq[(T, Int)] =
     items.zip(greedyBins(items.map(weight), budget))
+
+  /** One document's chunks greedy-packed in (chunk_idx, n_tokens) order,
+    * each bin's texts joined with `sep` in that order: the per-group body
+    * of `CorpusOps.binPackConcat` and of the strategies' collapse fold.
+    */
+  def packConcat(chunks: Seq[Chunk], budget: Long, sep: String = "\n\n"): Vector[PackedBin] = {
+    val sorted = chunks.sortBy(c => (c.chunk_idx, c.n_tokens))
+    val out = Vector.newBuilder[PackedBin]
+    val text = new java.lang.StringBuilder
+    var bin = -1
+    var tokens = 0L
+    var first = 0
+    def flush(): Unit = if (bin >= 0) out += PackedBin(bin, text.toString, tokens, first)
+    pack[Chunk](sorted, _.n_tokens, budget).foreach { case (c, b) =>
+      if (b == bin) { text.append(sep).append(c.text); tokens += c.n_tokens }
+      else {
+        flush()
+        bin = b; tokens = c.n_tokens; first = c.chunk_idx
+        text.setLength(0); text.append(c.text)
+      }
+    }
+    flush()
+    out.result()
+  }
 }
+
+/** One packed bin: id, joined text, summed weight, first chunk index. */
+final case class PackedBin(bin: Int, text: String, tokens: Long, firstIdx: Int)

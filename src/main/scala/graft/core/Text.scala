@@ -109,3 +109,68 @@ object Text {
   def stripCodeFence(s: String): String =
     fenceRe.findFirstMatchIn(s).map(_.group(1).trim).getOrElse(s.trim)
 }
+
+/** Exact pure-Scala twins of the Column functions in [[graft.functions]],
+  * for per-document folds that must reproduce what the Column form computes
+  * on the same string. They differ from [[Text]] on purpose:
+  *  - Spark's `trim` strips only U+0020, where `String.trim` strips every
+  *    char <= U+0020;
+  *  - Spark's `split` keeps trailing empty strings (limit -1).
+  * So `"\na b\n"` is 4 tokens here (`"", "a", "b", ""`) and 2 in
+  * [[Text.tokenCount]]. Null rules follow Spark's as well: a null input
+  * gives null where the Column form gives null, `concat` of a null is
+  * null, and `arrayJoin` skips nulls.
+  */
+object SparkText {
+
+  private val wsRun = java.util.regex.Pattern.compile("\\s+")
+
+  /** Spark `trim`: strips U+0020 only. */
+  private def trim(s: String): String = {
+    var a = 0
+    var b = s.length
+    while (a < b && s.charAt(a) == ' ') a += 1
+    while (b > a && s.charAt(b - 1) == ' ') b -= 1
+    s.substring(a, b)
+  }
+
+  private def tokens(s: String): Array[String] = wsRun.split(trim(s), -1)
+
+  /** Twin of [[graft.functions.tokenCount]] for a non-null string. */
+  def tokenCount(s: String): Long = {
+    val t = trim(s)
+    if (t.isEmpty) 0L else wsRun.split(t, -1).length.toLong
+  }
+
+  /** Twin of [[graft.functions.truncateTokens]]. */
+  def truncateTokens(s: String, k: Int): String =
+    if (s == null) null else tokens(s).iterator.take(k).mkString(" ")
+
+  /** Twin of [[graft.functions.squeezeWhitespace]]. */
+  def squeezeWhitespace(s: String): String =
+    if (s == null) null else trim(wsRun.matcher(s).replaceAll(" "))
+
+  /** Spark `concat`: null when any part is null. */
+  def concat(parts: String*): String =
+    if (parts.contains(null)) null else parts.mkString
+
+  /** Spark `array_join`: null elements are skipped. */
+  def arrayJoin(parts: Iterable[String], sep: String): String =
+    parts.iterator.filter(_ != null).mkString(sep)
+
+  /** Spark's ascending string order: nulls first, then UTF-8 byte order,
+    * which is code-point order (`String.compareTo` compares UTF-16 units,
+    * which puts U+10000.. before U+E000..U+FFFF).
+    */
+  val ordering: Ordering[String] = new Ordering[String] {
+    def compare(a: String, b: String): Int =
+      if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null)
+      else {
+        val n = math.min(a.length, b.length)
+        var i = 0
+        while (i < n && a.charAt(i) == b.charAt(i)) i += 1
+        if (i == n) Integer.compare(a.length, b.length)
+        else Integer.compare(a.codePointAt(i), b.codePointAt(i))
+      }
+  }
+}

@@ -11,8 +11,8 @@ import graft.core.{Splitter, Text, TreeNode}
   * (runners/run_summarization_ollama_mapreduce_hierarchical.py:202-239,
   * data_1/document_tree.json). Spark has no recursive datatype, so trees
   * live as adjacency-list rows (doc_id, node_id, parent_id, depth,
-  * node_type, text, ord) and recursion becomes bounded driver loops over
-  * the depth column.
+  * node_type, text, ord) and recursion becomes a bounded bottom-up walk
+  * over the depth column (per document, in [[graft.strategy.Hierarchical]]).
   */
 object TreeOps {
 

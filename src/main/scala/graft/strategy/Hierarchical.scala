@@ -2,9 +2,8 @@ package graft.strategy
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.PipelineConfig
+import graft.core.{PipelineConfig, SparkText, TreeNode}
 import graft.llm.Summarizer
 
 /** Q5 Hierarchical strategy (SURVEY.md §2.3; reference:
@@ -16,75 +15,78 @@ import graft.llm.Summarizer
   * concatenated in order and summarized, and the node + subtree is replaced
   * by ONE title-prefixed Paragraph at depth d (reference subtree
   * replacement :232-239, title preservation :250-271, empty-body handling
-  * :255-258). Each round is one grouped aggregate + one join; the driver
-  * loop is bounded by tree height. Functional rewrite, never in-place:
-  * kept-rows ∪ new-paragraph-rows (SURVEY.md §7.4.3).
+  * :255-258). Functional rewrite, never in-place: kept nodes ∪ new
+  * paragraphs (SURVEY.md §7.4.3).
+  *
+  * Scale notes: the levels are walked per document, in memory, inside one
+  * task (the reference's `collapse_level` walk stays inside one document
+  * too): one shuffle on doc_id, then one fold per doc. The start level is
+  * corpus-wide — one max(depth) probe, as in the reference (:281-285) — so
+  * a leaf Header above the deepest level of the corpus is collapsed as an
+  * empty section. Trade-off: one document's sections are summarized in one
+  * task; per-group state is one doc's node list.
   */
 final class Hierarchical(
     summarizer: Summarizer,
     cfg: PipelineConfig = PipelineConfig()) extends Serializable {
 
-  private val summarizeUdf =
-    udf((t: String) => if (t == null) "" else summarizer.summarize(t, cfg.maxSummaryTokens))
-
   // chunk cap at 75% of the context budget (reference :176-179)
   private val capTokens = math.max((cfg.tokenMax * 3) / 4, cfg.maxSummaryTokens)
 
-  /** Collapse all non-Paragraph nodes at depth d into single Paragraphs. */
-  private def collapseLevel(nodes: DataFrame, d: Int): DataFrame = {
-    val parents = nodes
-      .filter(col("depth") === d && col("node_type") =!= "Paragraph")
-      .select(col("doc_id"), col("node_id"), col("parent_id"),
-        col("text").as("title"), col("ord"))
-    // every depth d+1 row hangs under a depth-d parent; paragraph parents
-    // have no children, so grouping by parent covers exactly the sections
-    val sections = nodes.filter(col("depth") === d + 1)
-      .groupBy(col("doc_id"), col("parent_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("ord"), col("node_id"), col("text")))),
-          s => s.getField("text")), "\n\n").as("section_text"))
-    val newParas = parents
-      .join(sections.withColumnRenamed("parent_id", "node_id"),
-        Seq("doc_id", "node_id"), "left") // left: empty-body headers survive
-      .select(
-        col("doc_id"), col("node_id"), col("parent_id"),
-        lit(d).as("depth"),
-        lit("Paragraph").as("node_type"),
-        concat(col("title"), lit("\n\n"),
-          summarizeUdf(graft.functions.truncateTokens(
-            coalesce(col("section_text"), lit("")), capTokens))).as("text"),
-        col("ord"))
-    // keep: everything above d, plus Paragraphs already at d; all depth d+1
-    // rows are consumed, deeper rows no longer exist by the invariant
-    nodes.filter(col("depth") < d ||
-        (col("depth") === d && col("node_type") === "Paragraph"))
-      .unionByName(newParas.select(scala.collection.immutable.ArraySeq.unsafeWrapArray(nodes.columns.map(col)): _*))
+  private def summarizeText(t: String): String =
+    if (t == null) "" else summarizer.summarize(t, cfg.maxSummaryTokens)
+
+  /** Texts of sibling nodes joined in (ord, node_id, text) order. */
+  private def joinOrdered(nodes: Seq[TreeNode]): String = {
+    val order = Ordering.Tuple3(Ordering.Int, Ordering.Long, SparkText.ordering)
+    SparkText.arrayJoin(nodes.sortBy(n => (n.ord, n.node_id, n.text))(order).map(_.text), "\n\n")
+  }
+
+  /** One document's bottom-up collapse from level `maxDepth - 1` to 1,
+    * then the root gather + final summarize + whitespace polish (reference
+    * :296-313). None when the doc has no depth-1 node.
+    */
+  private def collapseDoc(nodes: Seq[TreeNode], maxDepth: Int): Option[String] = {
+    var live = nodes
+    var d = maxDepth - 1
+    while (d >= 1) {
+      // every depth d+1 node hangs under a depth-d parent; paragraph
+      // parents have no children, so grouping by parent covers exactly
+      // the sections
+      val sections = live.filter(_.depth == d + 1).groupBy(_.parent_id)
+      val newParas = live.collect {
+        case n if n.depth == d && n.node_type != null && n.node_type != "Paragraph" =>
+          // a Header without children is an empty section
+          val body = sections.get(n.node_id).fold("")(joinOrdered)
+          n.copy(node_type = "Paragraph", text = SparkText.concat(n.text, "\n\n",
+            summarizeText(SparkText.truncateTokens(body, capTokens))))
+      }
+      // keep: everything above d, plus Paragraphs already at d; all depth
+      // d+1 nodes are consumed, deeper ones no longer exist
+      live = live.filter(n => n.depth < d ||
+        (n.depth == d && n.node_type == "Paragraph")) ++ newParas
+      d -= 1
+    }
+    val top = live.filter(_.depth == 1)
+    Option.when(top.nonEmpty)(SparkText.squeezeWhitespace(
+      summarizeText(SparkText.truncateTokens(joinOrdered(top), capTokens))))
   }
 
   /** Run the full bottom-up collapse; returns (doc_id, summary). */
-  def summarize(nodes0: DataFrame): DataFrame = {
-    // depth probe (reference :281-285)
-    val maxDepth = nodes0.agg(max(col("depth"))).head().getInt(0)
-    var nodes = nodes0.persist(StorageLevel.MEMORY_AND_DISK)
-    var d = maxDepth - 1
-    while (d >= 1) {
-      val next = collapseLevel(nodes, d).persist(StorageLevel.MEMORY_AND_DISK)
-      next.count() // materialize before dropping the parent lineage
-      nodes.unpersist()
-      nodes = next
-      d -= 1
-    }
-    // root gather (depth-1 children in order) + final summarize + polish
-    // pass (reference :296-313; polish = one more scalar transform)
-    val out = nodes.filter(col("depth") === 1)
-      .groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("ord"), col("node_id"), col("text")))),
-          s => s.getField("text")), "\n\n").as("text"))
-      .select(col("doc_id"),
-        graft.functions.squeezeWhitespace(
-          summarizeUdf(graft.functions.truncateTokens(col("text"), capTokens)))
-          .as("summary"))
-    out
+  def summarize(nodes: DataFrame): DataFrame = {
+    val spark = nodes.sparkSession
+    import spark.implicits._
+    // One shuffle on doc_id into a fixed partition count (an RDD shuffle,
+    // so AQE does not coalesce the model-call-heavy groups into one task).
+    // The depth probe's job writes it and the fold's job reads it back, so
+    // the tree source is built once and nothing is left cached.
+    val byDoc = nodes.select(col("doc_id").cast("long"), col("node_id").cast("long"),
+        col("parent_id").cast("long"), col("depth").cast("int"), col("node_type"),
+        col("text"), col("ord").cast("int"))
+      .as[TreeNode].rdd
+      .groupBy((n: TreeNode) => n.doc_id, spark.sessionState.conf.numShufflePartitions)
+    val maxDepth = byDoc.values.map(_.iterator.map(_.depth).max).fold(0)(math.max)
+    byDoc.flatMap { case (docId, ns) => collapseDoc(ns.toVector, maxDepth).map(docId -> _) }
+      .toDF("doc_id", "summary")
   }
 }

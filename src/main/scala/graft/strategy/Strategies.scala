@@ -1,10 +1,9 @@
 package graft.strategy
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.{PipelineConfig, Text}
+import graft.core.{BinPack, Chunk, PipelineConfig, SparkText}
 import graft.functions.{tokenCount => tokenCountCol}
 import graft.llm.{CoverageJudge, Judge, Summarizer}
 import graft.operators.CorpusOps
@@ -18,20 +17,23 @@ import graft.operators.CorpusOps
   * Scale notes:
   *  - Parallelism is per-chunk for map stages and per-doc for folds; no
   *    stage ever materializes a whole corpus on one node.
-  *  - The collapse fixed-point (Q2/Q3) is a driver loop over a persisted
-  *    DataFrame (the standard Spark iterative-algorithm shape, like ALS);
-  *    each round re-persists and unpersists the previous round to keep
-  *    lineage bounded.
-  *  - Only over-budget docs re-enter the loop (semi/anti split), so late
-  *    rounds touch a shrinking fraction of the data.
+  *  - After the chunk-parallel map stage, Q2/Q3 run everything else (the
+  *    collapse rounds and the final reduce) as one per-document fold: one
+  *    shuffle on doc_id, then one task walks the doc's rounds in memory.
+  *    Building the plan runs no Spark job, and the pass runs the same jobs
+  *    however many rounds a doc needs; the reference's `should_collapse`
+  *    loop is per-document too.
+  *  - Trade-off: one document's collapse bins are summarized in one task,
+  *    not spread across tasks. Per-group state is one doc's chunk
+  *    summaries, the same bound [[CorpusOps.binPackConcat]] and
+  *    [[iterative]] have.
   */
 final class Strategies(
     summarizer: Summarizer,
     judge: Judge = CoverageJudge(),
     cfg: PipelineConfig = PipelineConfig()) extends Serializable {
 
-  private val summarizeUdf =
-    udf((t: String) => if (t == null) "" else summarizer.summarize(t, cfg.maxSummaryTokens))
+  private val summarizeUdf = udf(summarizeText _)
 
   /** Q1 Truncated: token-truncate the doc to the context budget, one
     * summarize call (reference: runners/run_summarization_ollama.py:8-37).
@@ -55,93 +57,63 @@ final class Strategies(
       .withColumn("n_tokens", tokenCountCol(col("text")))
       .select("doc_id", "chunk_idx", "text", "n_tokens")
 
-  /** One collapse round over the given chunk set: greedy bin-pack to the
-    * token budget, concat each bin in chunk order, summarize each bin
-    * (reference: runners/run_summarization_ollama_mapreduce.py:130-144).
-    * Pack+concat run fused (one shuffle per round — see
-    * [[CorpusOps.binPackConcat]]).
-    */
-  private def collapseOnce(chunks: DataFrame): DataFrame =
-    CorpusOps.binPackConcat(chunks, cfg.tokenMax)
-      .select(
-        col("doc_id"),
-        col("bin").cast("int").as("chunk_idx"),
-        summarizeUdf(col("text")).as("text"))
-      .withColumn("n_tokens", tokenCountCol(col("text")))
-      .select("doc_id", "chunk_idx", "text", "n_tokens")
+  private def summarizeText(t: String): String =
+    if (t == null) "" else summarizer.summarize(t, cfg.maxSummaryTokens)
 
-  /** Fixed-point collapse: while any doc's summaries exceed tokenMax,
-    * re-pack and re-summarize that doc's summaries (only over-budget docs
-    * re-enter; reference predicate `should_collapse`,
-    * runners/run_summarization_ollama_mapreduce.py:147-154, recursion_limit 10).
+  /** The per-document fold after the map stage (reference:
+    * runners/run_summarization_ollama_mapreduce.py:130-164). While the
+    * doc's summaries exceed `loopBudget` tokens (predicate
+    * `should_collapse`, :147-154) and fewer than maxCollapseRounds rounds
+    * ran (recursion_limit 10): greedy-pack them at tokenMax, join each bin
+    * in chunk order and `reduce` each bin. Then `reduce` the in-order join
+    * of what is left. Token counts and joins use the exact twins of the
+    * Column forms ([[SparkText]]), so a collapsed summary is counted the
+    * way the map stage counts its summaries.
     */
-  /** Over-budget doc ids of a chunk set (the loop predicate's input). */
-  private def overBudgetDocs(chunks: DataFrame, budget: Long): DataFrame =
-    chunks.groupBy("doc_id")
-      .agg(sum("n_tokens").as("doc_tokens"))
-      .filter(col("doc_tokens") > budget)
-      .select("doc_id")
-
-  /** Shared fixed-point collapse skeleton: ONE driver action per round —
-    * counting the over-budget docs of the freshly-built round also
-    * materializes its persist (the aggregate consumes every partition), so
-    * there is no separate `next.count()` before dropping the parent.
-    */
-  private def fixedPointCollapse(mapped0: DataFrame, budget: Long,
-      collapse: DataFrame => DataFrame): DataFrame = {
-    var cur = mapped0.persist(StorageLevel.MEMORY_AND_DISK)
-    var overDocs = overBudgetDocs(cur, budget).persist(StorageLevel.MEMORY_AND_DISK)
-    var overCount = overDocs.count() // materializes cur too
-    var round = 0
-    while (round < cfg.maxCollapseRounds && overCount > 0) {
-      val over = cur.join(overDocs, Seq("doc_id"), "left_semi")
-      val under = cur.join(overDocs, Seq("doc_id"), "left_anti")
-      val next = under.unionByName(collapse(over))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val nextOverDocs = overBudgetDocs(next, budget).persist(StorageLevel.MEMORY_AND_DISK)
-      overCount = nextOverDocs.count() // materializes next before parent drop
-      cur.unpersist()
-      overDocs.unpersist()
-      cur = next
-      overDocs = nextOverDocs
-      round += 1
-    }
-    overDocs.unpersist()
-    cur
+  private def collapseFold(mapped: DataFrame, loopBudget: Long,
+      reduce: String => String): DataFrame = {
+    val spark = mapped.sparkSession
+    import spark.implicits._
+    val tokenMax = cfg.tokenMax.toLong
+    val maxRounds = cfg.maxCollapseRounds
+    val order = Ordering.Tuple2(Ordering.Int, SparkText.ordering)
+    mapped.select(col("doc_id").cast("long"), col("chunk_idx").cast("int"),
+        col("text"), col("n_tokens").cast("long"))
+      // a fixed partition count, which AQE leaves alone: these rows are a
+      // few bytes each but carry the collapse rounds' model calls, so
+      // coalescing them by size would run the whole fold in one task
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("doc_id"))
+      .groupBy(col("doc_id")).as[Long, Chunk]
+      .mapGroups { (docId: Long, it: Iterator[Chunk]) =>
+        var cur: Seq[Chunk] = it.toVector
+        var round = 0
+        while (round < maxRounds && cur.iterator.map(_.n_tokens).sum > loopBudget) {
+          cur = BinPack.packConcat(cur, tokenMax).map { b =>
+            val s = reduce(b.text)
+            Chunk(docId, b.bin, s, SparkText.tokenCount(s))
+          }
+          round += 1
+        }
+        val texts = cur.sortBy(c => (c.chunk_idx, c.text))(order).map(_.text)
+        (docId, reduce(SparkText.arrayJoin(texts, "\n\n")))
+      }
+      .toDF("doc_id", "summary")
   }
 
-  private def collapseLoop(mapped0: DataFrame): DataFrame =
-    fixedPointCollapse(mapped0, cfg.tokenMax, collapseOnce)
-
-  /** Final reduce: concat all of a doc's (collapsed) summaries in order,
-    * one last summarize (reference: :157-164).
-    */
-  private def finalReduce(chunks: DataFrame): DataFrame =
-    chunks.groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("chunk_idx"), col("text")))),
-          s => s.getField("text")), "\n\n").as("text"))
-      .select(col("doc_id"), summarizeUdf(col("text")).as("summary"))
-
-  /** Q2 Map-Reduce: split -> parallel map-summarize -> fixed-point collapse
-    * -> final reduce (reference graph:
+  /** Q2 Map-Reduce: split -> parallel map-summarize -> per-doc collapse
+    * and final reduce (reference graph:
     * runners/run_summarization_ollama_mapreduce.py:75-180).
     */
-  def mapReduce(docs: DataFrame): DataFrame = {
-    val chunks = CorpusOps.chunkDocs(docs, cfg)
-    finalReduce(collapseLoop(mapSummarize(chunks)))
-  }
+  def mapReduce(docs: DataFrame): DataFrame =
+    collapseFold(mapSummarize(CorpusOps.chunkDocs(docs, cfg)), cfg.tokenMax.toLong,
+      summarizeText)
 
-  /** Q3 Map-Reduce + Critique: every reduce becomes
-    * reduce -> critique -> conditional refine, bounded by
-    * maxCritiqueIterations (reference `_reduce_with_critique`,
+  /** One reduce with critique: reduce -> critique -> conditional refine,
+    * bounded by maxCritiqueIterations (reference `_reduce_with_critique`,
     * runners/run_summarization_ollama_mapreduce_critique.py:224-265; verdict
-    * gate :253-255). The critique/refine loop is per-row local logic, so it
-    * runs inside one scalar (single projection, no extra shuffles); were the
-    * scalar remote-LLM-backed, the same gate would become a
-    * filter + union to batch only failing rows.
+    * gate :253-255).
     */
-  private val reduceWithCritiqueUdf = udf { (source: String) =>
+  private def reduceWithCritique(source: String): String =
     if (source == null) ""
     else {
       // prepared scalars: the source is analyzed (sentence-scored /
@@ -160,29 +132,17 @@ final class Strategies(
       }
       s
     }
-  }
 
-  private def collapseOnceCritique(chunks: DataFrame): DataFrame =
-    CorpusOps.binPackConcat(chunks, cfg.tokenMax)
-      .select(
-        col("doc_id"),
-        col("bin").cast("int").as("chunk_idx"),
-        reduceWithCritiqueUdf(col("text")).as("text"))
-      .withColumn("n_tokens", tokenCountCol(col("text")))
-      .select("doc_id", "chunk_idx", "text", "n_tokens")
-
-  def mapReduceCritique(docs: DataFrame): DataFrame = {
-    val mapped = mapSummarize(CorpusOps.chunkDocs(docs, cfg))
-    // collapse loop with critique on every reduce; final gets the
-    // half-budget headroom check of the reference (:315) via tokenMax/2
-    val halfBudget = math.max(cfg.tokenMax / 2, 1).toLong
-    val cur = fixedPointCollapse(mapped, halfBudget, collapseOnceCritique)
-    cur.groupBy(col("doc_id"))
-      .agg(array_join(
-        transform(array_sort(collect_list(struct(col("chunk_idx"), col("text")))),
-          s => s.getField("text")), "\n\n").as("text"))
-      .select(col("doc_id"), reduceWithCritiqueUdf(col("text")).as("summary"))
-  }
+  /** Q3 Map-Reduce + Critique: the Q2 fold with every reduce (collapse
+    * bins and the final one) replaced by [[reduceWithCritique]], and the
+    * reference's half-budget headroom check (:315) as the loop predicate:
+    * tokenMax/2. The critique loop is per-reduce local logic, so it runs
+    * inside the fold's task; were the scalar remote-LLM-backed, the gate
+    * would batch only failing reduces.
+    */
+  def mapReduceCritique(docs: DataFrame): DataFrame =
+    collapseFold(mapSummarize(CorpusOps.chunkDocs(docs, cfg)),
+      math.max(cfg.tokenMax / 2, 1).toLong, reduceWithCritique)
 
   /** Q4 Iterative refinement: summary_0 = summarize(chunk_0);
     * summary_i = summarize(summary_{i-1} ++ chunk_i) — an inherently

@@ -14,8 +14,8 @@ import graft.strategy.Strategies
   * Two shapes:
   *  - [[summarizeStream]]: the stateless truncated strategy (Q1) applied
   *    per row — a pure streaming projection, runs in any output mode.
-  *  - [[mapReducePerBatch]]: the full map-reduce strategy (driver
-  *    fixed-point collapse included) via `foreachBatch` — the idiomatic
+  *  - [[mapReducePerBatch]]: the full map-reduce strategy (per-document
+  *    collapse fold included) via `foreachBatch` — the idiomatic
   *    Spark way to run a batch-defined pipeline incrementally: each
   *    micro-batch of newly-arrived documents goes through the complete
   *    chunk -> map -> collapse -> reduce plan and appends its summaries.
@@ -280,9 +280,9 @@ object CorpusStreams {
 
   /** Full map-reduce summarization per micro-batch, written to `outPath`
     * keyed by batch id (exactly-once; see [[writeSummaryBatch]]).
-    * The collapse loop's driver actions run inside foreachBatch on the
-    * batch's (bounded) new-arrivals set, so stream progress is unaffected
-    * by corpus size — only by per-trigger file volume.
+    * Each batch's plan runs on the batch's (bounded) new-arrivals set and
+    * leaves nothing cached behind, so stream progress is unaffected by
+    * corpus size — only by per-trigger file volume.
     */
   def mapReducePerBatch(docs: DataFrame, strategies: Strategies,
       outPath: String, checkpoint: String): StreamingQuery =

@@ -16,7 +16,7 @@ class PlanHygieneSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   /** Queries whose construction EXECUTES work (streams, sink writes,
-    * driver fixed-point loops, collected centroids/recall baselines) —
+    * driver-side probes and loops, collected centroids/recall baselines) —
     * too costly to rebuild here; their plan shape is pinned by their own
     * specs (CurationSpec scan-count, StreamingSpec, dev PlanProbe).
     */
@@ -68,8 +68,8 @@ class PlanHygieneSpec extends AnyFunSuite {
     // checkpointed bruteForceTopK subtree (the ss1 shape, spec-pinned)
     "ss11_mmr_topk", "ev9_funnel", "ev10_retention",
     "sh1_shuffle",
-    "pipe_mapreduce", "pipe_critique", "pipe_iterative", "pipe_hierarchical",
-    "pipe_truncated", "s3_tree_ingest", "ss3_ivf_topk", "ss3_recall",
+    // pipe_hierarchical runs its corpus-wide max(depth) probe
+    "pipe_hierarchical", "s3_tree_ingest", "ss3_ivf_topk", "ss3_recall",
     "ss2_recall", "dd6b_recall", "eval_pair_metrics", "eval_summary_stats",
     "eval_judge_scores", "eval_judge_stats", "eval_bertscore",
     // k-means trains (collects centroids) at construction; plan shape

@@ -115,6 +115,71 @@ class StrategiesSpec extends AnyFunSuite {
       2L -> "Four five six seven eight nine ten eleven"))
   }
 
+  test("golden pin: Q5 on trees of mixed depth (corpus-wide max depth decides)") {
+    // doc 1 is three levels deep, doc 2 two, doc 3 one. Doc 2's leaf
+    // Header "Leaf" sits at its own deepest level: it is collapsed as an
+    // empty section only because the corpus-wide max depth is 3, so its
+    // parent "Tail" summarizes "Leaf\n\n" + summarize("") rather than the
+    // raw title. Rows are listed out of order; ord decides.
+    import graft.core.TreeNode
+    val nodes = Seq(
+      TreeNode(1L, 0L, -1L, 0, "Document", "doc one", 0),
+      TreeNode(1L, 6L, 0L, 1, "Header", "Part B", 1),
+      TreeNode(1L, 7L, 6L, 2, "Header", "Section B1", 0),
+      TreeNode(1L, 1L, 0L, 1, "Header", "Part A", 0),
+      TreeNode(1L, 2L, 1L, 2, "Header", "Section A1", 0),
+      TreeNode(1L, 4L, 2L, 3, "Paragraph", "Zeta eta theta iota. Kappa lambda mu nu.", 1),
+      TreeNode(1L, 3L, 2L, 3, "Paragraph", "Alpha beta gamma. Delta epsilon alpha.", 0),
+      TreeNode(1L, 5L, 1L, 2, "Paragraph",
+        "Loose paragraph under part A sits here, after alpha and beta.", 1),
+      TreeNode(2L, 0L, -1L, 0, "Document", "doc two", 0),
+      TreeNode(2L, 1L, 0L, 1, "Header", "Intro", 0),
+      TreeNode(2L, 2L, 1L, 2, "Paragraph", "One two three four. Five six seven one.", 0),
+      TreeNode(2L, 3L, 0L, 1, "Header", "Tail", 1),
+      TreeNode(2L, 4L, 3L, 2, "Header", "Leaf", 0),
+      TreeNode(2L, 5L, 0L, 1, "Header", "Empty", 2),
+      TreeNode(3L, 0L, -1L, 0, "Document", "doc three", 0),
+      TreeNode(3L, 1L, 0L, 1, "Paragraph", "Only a flat paragraph here. Nothing nested.", 0))
+      .toDF()
+    def out(s: graft.llm.Summarizer, c: PipelineConfig) = new Hierarchical(s, c)
+      .summarize(nodes).as[(Long, String)].collect().toMap
+    assert(out(ExtractiveSummarizer, Pipelines.TestCfg) == Map(
+      1L -> "Part A Loose paragraph under part A sits",
+      2L -> "Intro One two three four. Tail Leaf Empty",
+      3L -> "Only a flat paragraph here. Nothing nested."))
+    // the marking summarizer shows each level's input; "Leaf <>" is the
+    // empty-section collapse of doc 2's leaf Header
+    assert(out(MarkSummarizer, Pipelines.TestCfg) == Map(
+      1L -> ("<Part A <Section A1 <Alpha beta gamma. Delta epsilon alpha. " +
+        "Zeta eta theta iota. Kappa lambda mu nu.>>"),
+      2L -> "<Intro <One two three four. Five six seven one.> Tail <Leaf <>> Empty <>>",
+      3L -> "<Only a flat paragraph here. Nothing nested.>"))
+    assert(out(MarkSummarizer, Pipelines.TestCfg.copy(tokenMax = 200)) == Map(
+      1L -> ("<Part A <Section A1 <Alpha beta gamma. Delta epsilon alpha. " +
+        "Zeta eta theta iota. Kappa lambda mu nu.> Loose paragraph under part A " +
+        "sits here, after alpha and beta.> Part B <Section B1 <>>>"),
+      2L -> "<Intro <One two three four. Five six seven one.> Tail <Leaf <>> Empty <>>",
+      3L -> "<Only a flat paragraph here. Nothing nested.>"))
+  }
+
+  test("golden pin: Q2/Q3 collapse rounds (a summarizer that reports its input)") {
+    // Each summary is four tokens, so at tokenMax 10 a bin holds two
+    // summaries: doc 1's eight chunks collapse 8 -> 4 -> 2 summaries, doc
+    // 2's three chunks 3 -> 2, doc 3 needs no round. Critique's loop budget
+    // is tokenMax/2 = 5, so it collapses each doc down to one summary.
+    val rdocs = Seq(
+      (1L, (1 to 48).map(i => s"w$i").mkString(" ")),
+      (2L, (1 to 18).map(i => s"v$i").mkString(" ")),
+      (3L, "a b c d"))
+      .toDF("doc_id", "text")
+    val st = new Strategies(ReportSummarizer, cfg = cfg.copy(chunker = "token_window"))
+    def out(df: DataFrame) = df.as[(Long, String)].collect().toMap
+    assert(out(st.mapReduce(rdocs)) ==
+      Map(1L -> "d4 8 2 d3", 2L -> "d3 8 2 d2", 3L -> "d2 4 0 d1"))
+    assert(out(st.mapReduceCritique(rdocs)) ==
+      Map(1L -> "d5 4 0 d4", 2L -> "d4 4 0 d3", 3L -> "d2 4 0 d1"))
+  }
+
   test("M2 bertScore: identical texts 1.0; disjoint near 0; asymmetric P/R") {
     val pairs = Seq(
       (1L, "alpha beta gamma", "alpha beta gamma"),      // identical
@@ -203,5 +268,27 @@ class StrategiesSpec extends AnyFunSuite {
       .map(r => r.getAs[String]("metric") -> r.getAs[String]("best_model")).toMap
     assert(got("rouge1") == "model_b")
     assert(got("rouge2") == "model_b") // tie -> lexicographically larger model
+  }
+}
+
+/** Test summarizer that shows what it was given: the input wrapped in
+  * angle brackets with newlines made visible, so a golden pins the exact
+  * text each level handed to the model.
+  */
+object MarkSummarizer extends graft.llm.Summarizer {
+  override def summarize(text: String, maxTokens: Int): String =
+    "<" + text.replace("\n", "/") + ">"
+}
+
+/** Test summarizer whose four-token output reports its input: its
+  * nesting level `dK` (one more than the deepest level it was given),
+  * token count, newline count and first token.
+  */
+object ReportSummarizer extends graft.llm.Summarizer {
+  override def summarize(text: String, maxTokens: Int): String = {
+    val toks = Text.wsTokens(text)
+    val level = toks.collect { case t if t.matches("d[0-9]+") => t.tail.toInt }
+      .maxOption.getOrElse(0) + 1
+    s"d$level ${toks.length} ${text.count(_ == '\n')} ${toks.headOption.getOrElse("-")}"
   }
 }
